@@ -19,12 +19,10 @@ with encode round-trip partners for each — PCM WAV audio (stdlib
 the from-scratch codecs in audio.py (round 4) — and FLAC (flac.py, a
 full from-scratch lossless decoder+encoder, round 4) produce genuine
 pixel/sample-derived features through
-`media_features(real_decode=True)`.  MP4 and Matroska/WebM video and
-MPEG audio (mp3.py frame-walk, round 5) get CONTAINER-level triage
-features (no pixel/sample decode); JPEG-in-TIFF (compression 7,
+`media_features(real_decode=True)`.  JPEG-in-TIFF (compression 7,
 including JPEGTables abbreviated streams) decodes through jpeg.py;
-the remaining external-codec extension points are the codec payloads
-inside video containers (H.264/VP9), MP3 sample decode, and OGG;
+video other than animated GIF, MP3 and OGG are the external-codec
+extension points (their rows get null features);
 `deterministic_fake_decode` remains for plumbing tests that want
 payload-seeded reproducible rows.
 """
@@ -842,47 +840,17 @@ def video_features(payload: bytes) -> list[float]:
 
 def real_decode_features(kind: str, payload: bytes) -> list[float]:
     """Per-kind dispatch for media_features(real_decode=True).  Video
-    decodes natively when the container is an animated GIF; MP4/ISO-BMFF
-    and Matroska/WebM yield CONTAINER-derived triage features (mp4.py /
-    webm.py parse the real box/element trees — duration/fps/bitrate/
-    keyframe shape — no pixel decode); the codec payloads inside
-    mdat/SimpleBlocks remain the documented external-codec extension
-    point."""
+    decodes natively when the container is an animated GIF; other video
+    containers are the documented external-codec extension point."""
     if kind == "image":
         return image_features(payload)
-    if kind == "audio" and payload[:4] == b"OggS":
-        # Ogg Vorbis/Opus: page-walk CONTAINER triage (ogg.py, CRC
-        # verified); packet-level audio decode stays the documented
-        # external-codec extension point
-        from medical_ocr_pipeline_spark.ogg import ogg_container_features
-
-        return ogg_container_features(payload)
-    if kind == "audio" and (
-        payload[:3] == b"ID3"
-        or (len(payload) > 1 and payload[0] == 0xFF
-            and (payload[1] & 0xE0) == 0xE0)
-    ):
-        # MPEG audio: frame-walk CONTAINER triage (mp3.py) — duration/
-        # bitrate/VBR shape with zero DSP; sample decode stays the
-        # documented external-codec extension point
-        from medical_ocr_pipeline_spark.mp3 import mp3_container_features
-
-        return mp3_container_features(payload)
     if kind == "audio":
         return audio_features(payload)
     if kind == "video" and payload[:6] in (b"GIF87a", b"GIF89a"):
         return video_features(payload)
-    if kind == "video" and len(payload) >= 12 and payload[4:8] == b"ftyp":
-        from medical_ocr_pipeline_spark.mp4 import mp4_container_features
-
-        return mp4_container_features(payload)
-    if kind == "video" and payload[:4] == b"\x1aE\xdf\xa3":
-        from medical_ocr_pipeline_spark.webm import webm_container_features
-
-        return webm_container_features(payload)
     raise NotImplementedError(
-        f"no native decoder for kind={kind!r}; non-GIF/MP4/WebM video "
-        "needs an external codec wired here"
+        f"no native decoder for kind={kind!r}; non-GIF video needs an "
+        "external codec wired here"
     )
 
 
@@ -1364,9 +1332,8 @@ def decode_gif_frames(payload: bytes, max_frames: int | None = None):
 
     This is the engine's native video-container decode path: an
     animated GIF is a real timed frame sequence, so frame sampling and
-    video features run end-to-end without an external codec (MP4 and
-    Matroska/WebM get container-level triage via mp4.py / webm.py;
-    their codec payloads remain the documented extension point)."""
+    video features run end-to-end without an external codec (other
+    video containers remain the documented extension point)."""
     import numpy as np
 
     if payload[:6] not in (b"GIF87a", b"GIF89a"):

@@ -474,19 +474,25 @@ def conversation_digest_md(conversations: DataFrame) -> DataFrame:
 def extract_blocks_table(df: DataFrame) -> DataFrame:
     """Per-turn BLOCK-array table (SURVEY.md §1.2: a page file ≙ one row
     with blocks ArrayType(BLOCK)) — the lineage-preserving intermediate;
-    explode for per-block rows."""
-    import pandas as pd
+    explode for per-block rows.  Same Arrow boundary as
+    extract_transcripts (mapInArrow, keys cast to the declared types)."""
+    import pyarrow as pa
 
     from medical_ocr_pipeline_spark.core.extract import extract_turn_blocks
     from medical_ocr_pipeline_spark.schemas import TURN_BLOCKS
 
+    blocks_type = pa.list_(pa.struct([
+        ("text", pa.string()), ("confidence", pa.float64()),
+        ("bbox", pa.list_(pa.float64())), ("source", pa.string()),
+        ("section", pa.string()),
+    ]))
+
     def run(batches):
-        for pdf in batches:
-            out = {"conv_id": pdf["conv_id"].to_numpy(),
-                   "turn_idx": pdf["turn_idx"].to_numpy(), "blocks": []}
-            for payload in pdf["text"].tolist():
+        for batch in batches:
+            blocks = []
+            for payload in batch.column("text").to_pylist():
                 _res, _gated, final_blocks = extract_turn_blocks(payload)
-                out["blocks"].append([
+                blocks.append([
                     {
                         "text": b["text"],
                         "confidence": float(b.get("confidence", 1.0)),
@@ -496,11 +502,17 @@ def extract_blocks_table(df: DataFrame) -> DataFrame:
                     }
                     for b in final_blocks
                 ])
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("conv_id"), batch.column("turn_idx"),
+                 pa.array(blocks, type=blocks_type)],
+                names=["conv_id", "turn_idx", "blocks"],
+            )
 
-    return df.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=TURN_BLOCKS
-    )
+    return df.select(
+        F.col("conv_id").cast("string").alias("conv_id"),
+        F.col("turn_idx").cast("int").alias("turn_idx"),
+        "text",
+    ).mapInArrow(run, schema=TURN_BLOCKS)
 
 
 def explode_blocks(turn_blocks: DataFrame) -> DataFrame:

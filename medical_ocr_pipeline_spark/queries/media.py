@@ -97,13 +97,10 @@ def media_features_real(spark, sf_dir):
         encode_wav(xs, 8000, 1, codec="ulaw")[:24],
         {"mime": "audio/wav", "width": 0, "height": 0, "duration_ms": 0},
     ))
-    # video rows (round 4): an animated GIF decodes frames natively;
-    # an MP4 skeleton exercises the ISO-BMFF container triage path
-    # (real box/sample-table parse, no codec)
+    # video row (round 4): an animated GIF decodes frames natively
     import numpy as np
 
     from medical_ocr_pipeline_spark.multimodal import encode_gif_animated
-    from medical_ocr_pipeline_spark.mp4 import encode_mp4_skeleton
 
     frames = [
         np.fromfunction(
@@ -115,25 +112,6 @@ def media_features_real(spark, sf_dir):
     rows.append((
         "vid_gif", "video", encode_gif_animated(frames, delays_cs=[10] * 4),
         {"mime": "image/gif", "width": 8, "height": 6, "duration_ms": 400},
-    ))
-    rows.append((
-        "vid_mp4", "video",
-        encode_mp4_skeleton(
-            320, 240, [400 + (37 * i) % 300 for i in range(20)], fps=10
-        ),
-        {"mime": "video/mp4", "width": 320, "height": 240,
-         "duration_ms": 2000},
-    ))
-    # Matroska/WebM skeleton: the EBML container triage path (webm.py)
-    from medical_ocr_pipeline_spark.webm import encode_webm_skeleton
-
-    rows.append((
-        "vid_webm", "video",
-        encode_webm_skeleton(
-            640, 360, [500 + (41 * i) % 250 for i in range(24)], fps=12
-        ),
-        {"mime": "video/webm", "width": 640, "height": 360,
-         "duration_ms": 2000},
     ))
     # TIFF rows (round 4, third session): the archival scanned-page
     # format through the from-scratch baseline decoder — an
@@ -216,26 +194,6 @@ def media_features_real(spark, sf_dir):
         {"mime": "image/tiff", "width": 10, "height": 12,
          "duration_ms": 0},
     ))
-    # MPEG audio (round 5): frame-walk container triage — a VBR Layer
-    # III chain with an ID3v2 prefix (mp3.py; no sample decode)
-    from medical_ocr_pipeline_spark.mp3 import encode_mp3_skeleton
-
-    rows.append((
-        "aud_mp3", "audio",
-        encode_mp3_skeleton(24, [96, 128, 160], id3=True),
-        {"mime": "audio/mpeg", "width": 0, "height": 0,
-         "duration_ms": 24 * 1152 * 1000 // 44100},
-    ))
-    # Ogg Opus (round 5): page-walk container triage with verified
-    # per-page CRCs (ogg.py; no packet decode)
-    from medical_ocr_pipeline_spark.ogg import encode_ogg_skeleton
-
-    rows.append((
-        "aud_ogg", "audio",
-        encode_ogg_skeleton("opus", n_pages=8, samples=144000),
-        {"mime": "audio/ogg", "width": 0, "height": 0,
-         "duration_ms": (144000 - 312) * 1000 // 48000},
-    ))
     media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     feats = media_features(media, real_decode=True)
     return feats.select(
@@ -287,16 +245,6 @@ def media_thumbnails_smoke(spark, sf_dir):
     rows.append(("jpg_bad", "image", b"\xff\xd8\xff\xe0 not decodable",
                  {"mime": "image/jpeg", "width": 0, "height": 0,
                   "duration_ms": 0}))
-    # Ogg Opus (round 5): page-walk container triage with verified
-    # per-page CRCs (ogg.py; no packet decode)
-    from medical_ocr_pipeline_spark.ogg import encode_ogg_skeleton
-
-    rows.append((
-        "aud_ogg", "audio",
-        encode_ogg_skeleton("opus", n_pages=8, samples=144000),
-        {"mime": "audio/ogg", "width": 0, "height": 0,
-         "duration_ms": (144000 - 312) * 1000 // 48000},
-    ))
     media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     thumbs = media_thumbnails(media, out_w=3, out_h=3)
     return thumbs.select(
